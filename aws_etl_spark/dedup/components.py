@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aws_etl_spark.ops import lanes
+
 
 def _canonical_edges(pairs: DataFrame, src: str, dst: str) -> DataFrame:
     """Undirected edge list → (u, v) with u < v, deduped."""
@@ -39,13 +41,12 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iterations: int = 20,
-    small_graph_edges: int = 2_000_000,
 ) -> DataFrame:
     """(node, component) — component = min node id reachable.
 
     Two execution paths, picked by measured edge count:
 
-    - **small graph** (≤ ``small_graph_edges``, the common case — the
+    - **small graph** (≤ the ``cc_edges`` lane cap, the common case — the
       dup graph after threshold filtering is a sparse set of tiny
       cliques even on huge corpora): union-find on the driver. The
       edge list is already materialized for the count; 2M edges ≈
@@ -65,7 +66,7 @@ def connected_components(
     n_edges = edges.count()
     if n_edges == 0:
         return edges.select(F.col("u").alias("node"), F.col("u").alias("comp"))
-    if n_edges <= small_graph_edges:
+    if lanes.within("cc_edges", n_edges):
         parent: dict = {}
 
         def find(x):
@@ -89,18 +90,13 @@ def connected_components(
             ru, rv = find(u), find(v)
             if ru != rv:
                 parent[max(ru, rv)] = min(ru, rv)
-        from pyspark.sql import types as T
-
-        labels = [(n, find(n)) for n in parent]
-        node_type = edges.schema["u"].dataType
         from aws_etl_spark.ops.scale import bounded_rows_df
 
+        node_type = edges.schema["u"].dataType.simpleString()
         return bounded_rows_df(
             pairs.sparkSession,
-            labels,
-            T.StructType(
-                [T.StructField("node", node_type), T.StructField("comp", node_type)]
-            ),
+            [(n, find(n)) for n in parent],
+            f"node {node_type}, comp {node_type}",
         )
     # node → current component label (start: itself)
     labels = (
@@ -116,8 +112,8 @@ def connected_components(
     # Catalyst planned SortMergeJoin — shuffling the EDGE table (the
     # big side) twice per round. The node count is measured once
     # (node count only shrinks in no iteration — the label table keys
-    # stay the full node set), and below the established
-    # SPARK_GRAFT_STATE_BCAST_ROWS cap every per-round join broadcasts
+    # stay the full node set), and below the state_bcast_rows lane
+    # cap every per-round join broadcasts
     # the label side instead: edges are never re-shuffled. A graph
     # whose node state exceeds the cap keeps the shuffle joins —
     # same results. Lineage stays truncated EVERY round (not the

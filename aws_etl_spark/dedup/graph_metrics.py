@@ -228,8 +228,7 @@ def label_propagation(
     is truncated each round (localCheckpoint) per iterative-operator
     hygiene.
     """
-    import os
-
+    from aws_etl_spark.ops import lanes
     from aws_etl_spark.ops.scale import broadcast_if_bounded
 
     edges = _canonical(pairs, src, dst)
@@ -237,14 +236,10 @@ def label_propagation(
     # Bounded-edge driver fast path (round-13 — the k-core treatment):
     # synchronous rounds of integer vote counting with the
     # max(count, -label) tiebreak replay bit-exactly on the collected
-    # symmetric edge list. Above the dial the distributed loop below
-    # runs unchanged.
-    driver_cap = int(
-        os.environ.get("SPARK_GRAFT_LPA_DRIVER_EDGES", "2000000")
-    )
-    if sym.count() <= driver_cap:
+    # symmetric edge list. Above the lpa_edges cap the distributed
+    # loop below runs unchanged.
+    if lanes.within("lpa_edges", sym.count()):
         from aws_etl_spark.ops.scale import bounded_rows_df
-        from pyspark.sql import types as T
 
         el = [(r["u"], r["v"]) for r in sym.collect()]
         lab = {u: u for u, _ in el}
@@ -258,16 +253,10 @@ def label_propagation(
                 u: max(d.items(), key=lambda kv: (kv[1], -kv[0]))[0]
                 for u, d in votes.items()
             }
-        node_type = sym.schema["u"].dataType
         return bounded_rows_df(
             pairs.sparkSession,
             [(n, int(v)) for n, v in lab.items()],
-            T.StructType(
-                [
-                    T.StructField("node", node_type),
-                    T.StructField("label", T.LongType()),
-                ]
-            ),
+            f"node {sym.schema['u'].dataType.simpleString()}, label bigint",
         )
     labels = sym.select("u").distinct().select(
         F.col("u").alias("node"), F.col("u").alias("label")
@@ -313,24 +302,19 @@ def k_core_membership(
     iterative shape as star-contraction CC). ``degree`` is the
     original degree; ``in_core`` marks round-``n_rounds`` survivors.
     """
-    import os
-
+    from aws_etl_spark.ops import lanes
     from aws_etl_spark.ops.scale import broadcast_if_bounded
 
     edges0 = _canonical(pairs, src, dst).localCheckpoint(eager=True)
     # Bounded-edge driver fast path (round-13 — the pagerank/markov
     # bounded-collect treatment): peeling is PURE integer counting and
-    # comparison (no division, no floats), so below the edge dial the
-    # n_rounds synchronous peels replay exactly on the collected edge
-    # list instead of ~4 driver-coordinated jobs per round. Above the
-    # dial the distributed loop below runs unchanged. Forced-path
-    # equivalence pinned in tests/test_r13_fastpaths.py.
-    driver_cap = int(
-        os.environ.get("SPARK_GRAFT_KCORE_DRIVER_EDGES", "2000000")
-    )
-    if edges0.count() <= driver_cap:
+    # comparison (no division, no floats), so below the kcore_edges
+    # cap the n_rounds synchronous peels replay exactly on the
+    # collected edge list instead of ~4 driver-coordinated jobs per
+    # round. Above it the distributed loop below runs unchanged.
+    # Forced-path equivalence pinned in tests/test_r13_fastpaths.py.
+    if lanes.within("kcore_edges", edges0.count()):
         from aws_etl_spark.ops.scale import bounded_rows_df
-        from pyspark.sql import types as T
 
         edge_l = [(r["u"], r["v"]) for r in edges0.collect()]
         deg0_d: dict = {}
@@ -347,17 +331,11 @@ def k_core_membership(
                 degs[u] = degs.get(u, 0) + 1
                 degs[v] = degs.get(v, 0) + 1
         in_core = {n for n, c in degs.items() if c >= k}
-        node_type = edges0.schema["u"].dataType
+        node_type = edges0.schema["u"].dataType.simpleString()
         return bounded_rows_df(
             pairs.sparkSession,
             [(n, d, n in in_core) for n, d in deg0_d.items()],
-            T.StructType(
-                [
-                    T.StructField("node", node_type),
-                    T.StructField("degree", T.LongType()),
-                    T.StructField("in_core", T.BooleanType()),
-                ]
-            ),
+            f"node {node_type}, degree bigint, in_core boolean",
         )
     # materialized once: round 1's peel filter AND the final output
     # both read these original degrees (reuse-once hygiene)

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from aws_etl_spark.ops import lanes
+
 DAMPING = 0.85
 N_ITER = 10
 
@@ -84,49 +86,23 @@ def pagerank(
     # query's declared contract is the 1e-6-relative agreement with an
     # exact power iteration pinned in tests/test_dedup.py (rows-only,
     # no hash oracle), and the replay sits far inside it.
-    cap = _driver_edge_cap()
-    if cap > 0 and edges.count() <= cap:
+    if lanes.within("pagerank_edges", edges.count()):
         import numpy as np
 
         from aws_etl_spark.ops.scale import bounded_rows_df
 
-        deg_rows = degrees.collect()
-        nodes = [r[0] for r in deg_rows]
-        deg = np.fromiter(
-            (r[1] for r in deg_rows), dtype=np.float64, count=len(nodes)
-        )
-        idx = {u: i for i, u in enumerate(nodes)}
-        e_rows = edges.collect()
-        ui = np.fromiter(
-            (idx[r[0]] for r in e_rows), dtype=np.int64, count=len(e_rows)
-        )
-        vi = np.fromiter(
-            (idx[r[1]] for r in e_rows), dtype=np.int64, count=len(e_rows)
-        )
+        nodes, deg, ui, vi = _collected_graph(edges, degrees)
         teleport_f = (1.0 - damping) / n_nodes
         rank = np.full(len(nodes), 1.0 / n_nodes, dtype=np.float64)
         for _ in range(n_iter):
             contrib = np.zeros(len(nodes), dtype=np.float64)
             np.add.at(contrib, vi, rank[ui] / deg[ui])
             rank = teleport_f + damping * contrib
-        from pyspark.sql.types import (
-            DoubleType,
-            LongType,
-            StructField,
-            StructType,
-        )
-
-        schema = StructType(
-            [
-                StructField("node", edges.schema["u"].dataType, True),
-                StructField("rank", DoubleType(), True),
-                StructField("degree", LongType(), True),
-            ]
-        )
         return bounded_rows_df(
             edges.sparkSession,
             [(u, float(rank[i]), int(deg[i])) for i, u in enumerate(nodes)],
-            schema,
+            f"node {edges.schema['u'].dataType.simpleString()}, "
+            "rank double, degree bigint",
         )
 
     # ranks/contribs are node-bounded; checkpointed lineage hides that
@@ -176,19 +152,19 @@ def pagerank(
 Q_SCALE = 10**12
 
 
-def _driver_edge_cap() -> int:
-    """Edge-count dial for the driver fast path of the QUANTIZED
-    variant (round-13 optimization, the events_markov_stationary
-    treatment): below it the bounded-state power iteration runs as
-    exact int64 numpy on the collected edge list instead of
-    2 joins + 1 agg Spark jobs PER ROUND. 2M edges ≈ 50 MB collected —
-    far under the driver headroom; above the dial the distributed
-    loop is unchanged, so a graph that outgrows the driver keeps the
-    scale-out plan. 0 disables (the equivalence tests force both
-    paths)."""
-    import os
+def _collected_graph(edges: DataFrame, degrees: DataFrame):
+    """(nodes, int64 degree per node, edge source index, edge
+    destination index) collected for a driver replay."""
+    import numpy as np
 
-    return int(os.environ.get("SPARK_GRAFT_PAGERANK_DRIVER_EDGES", "2000000"))
+    deg_rows = degrees.collect()
+    nodes = [r[0] for r in deg_rows]
+    deg = np.fromiter((r[1] for r in deg_rows), dtype=np.int64, count=len(nodes))
+    idx = {u: i for i, u in enumerate(nodes)}
+    e_rows = edges.collect()
+    ui = np.fromiter((idx[r[0]] for r in e_rows), dtype=np.int64, count=len(e_rows))
+    vi = np.fromiter((idx[r[1]] for r in e_rows), dtype=np.int64, count=len(e_rows))
+    return nodes, deg, ui, vi
 
 
 def _pagerank_quantized_driver(
@@ -209,14 +185,8 @@ def _pagerank_quantized_driver(
     damping_pct * contrib <= 8.5e13 << 2^63."""
     import numpy as np
 
-    deg_rows = degrees.collect()
-    nodes = [r[0] for r in deg_rows]
+    nodes, deg, ui, vi = _collected_graph(edges, degrees)
     n = len(nodes)
-    deg = np.fromiter((r[1] for r in deg_rows), dtype=np.int64, count=n)
-    idx = {u: i for i, u in enumerate(nodes)}
-    e_rows = edges.collect()
-    ui = np.fromiter((idx[r[0]] for r in e_rows), dtype=np.int64, count=len(e_rows))
-    vi = np.fromiter((idx[r[1]] for r in e_rows), dtype=np.int64, count=len(e_rows))
     init_q = Q_SCALE // n
     teleport_q = ((100 - damping_pct) * Q_SCALE) // (100 * n)
     rank = np.full(n, init_q, dtype=np.int64)
@@ -224,19 +194,14 @@ def _pagerank_quantized_driver(
         contrib = np.zeros(n, dtype=np.int64)
         np.add.at(contrib, vi, rank[ui] // deg[ui])
         rank = teleport_q + (damping_pct * contrib) // 100
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("node", edges.schema["u"].dataType, True),
-            StructField("rank_q", LongType(), True),
-            StructField("degree", LongType(), True),
-        ]
-    )
-    out = [(u, int(rank[i]), int(deg[i])) for i, u in enumerate(nodes)]
     from aws_etl_spark.ops.scale import bounded_rows_df
 
-    return bounded_rows_df(edges.sparkSession, out, schema)
+    return bounded_rows_df(
+        edges.sparkSession,
+        [(u, int(rank[i]), int(deg[i])) for i, u in enumerate(nodes)],
+        f"node {edges.schema['u'].dataType.simpleString()}, "
+        "rank_q bigint, degree bigint",
+    )
 
 
 def pagerank_quantized(
@@ -266,11 +231,11 @@ def pagerank_quantized(
             F.lit(0).cast("bigint").alias("degree"),
         )
     # round-13 optimization: the per-round state is one integer per
-    # node and the arithmetic is exact — below the edge dial the
-    # 2-jobs-per-round loop collapses to a driver numpy replay
-    # (~20 AQE round-trips removed); above it nothing changes
-    cap = _driver_edge_cap()
-    if cap > 0 and edges.count() <= cap:
+    # node and the arithmetic is exact — below the pagerank_edges cap
+    # (2M edges ≈ 50 MB collected) the 2-jobs-per-round loop collapses
+    # to a driver numpy replay (~20 AQE round-trips removed); above it
+    # nothing changes
+    if lanes.within("pagerank_edges", edges.count()):
         return _pagerank_quantized_driver(edges, degrees, damping_pct, n_iter)
     b = broadcast_if_bounded(n_nodes)
     init_q = Q_SCALE // n_nodes

@@ -211,9 +211,14 @@ def materialized(
                 build().write.mode("overwrite").parquet(tmp)
                 _, jtmp = _hadoop_fs(spark, tmp)
                 if not fs.rename(jtmp, jfinal):
-                    # lost a cross-process race for the same key —
-                    # the winner's artifact is equivalent by keying
+                    # an existing destination is an equivalent artifact
+                    # (same key); a missing one is a storage fault
+                    # (permissions, missing parent, object-store error)
                     fs.delete(jtmp, True)
+                    if not fs.exists(jfinal):
+                        raise OSError(
+                            f"pair cache: could not rename {tmp} to {path}"
+                        )
         return spark.read.parquet(path)
     with _LOCK:
         path = os.path.join(_cache_dir(), key)
@@ -223,6 +228,26 @@ def materialized(
             build().write.mode("overwrite").parquet(tmp)
             os.replace(tmp, path)
     return spark.read.parquet(path)
+
+
+def trained_memo_key(
+    tag: str, df: DataFrame, params: dict, per_session: bool = False
+):
+    """Key for a process-scoped trained-state memo (the BPE, PQ and
+    spherical-k-means trainers), or None when memoizing is off
+    (``SPARK_GRAFT_NO_PAIR_CACHE`` set) or the input has no
+    fingerprint. ``per_session`` adds the session identity, for memos
+    whose values are session-owned checkpointed DataFrames."""
+    if os.environ.get("SPARK_GRAFT_NO_PAIR_CACHE"):
+        return None
+    fp = _fingerprint(tag, df, params)
+    if fp is None or not per_session:
+        return fp
+    try:
+        spark = df.sparkSession
+        return (spark.sparkContext.applicationId, id(spark)), fp
+    except Exception:
+        return None
 
 
 def cache_active(df: DataFrame) -> bool:

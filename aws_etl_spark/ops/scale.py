@@ -172,7 +172,7 @@ def bloom_pruned_join(
     return pruned.join(small, key, how)
 
 
-def broadcast_if_bounded(n_rows: int, cap: int | None = None):
+def broadcast_if_bounded(n_rows: int):
     """Broadcast-hint applicator for ITERATIVE-STATE joins, gated on a
     measured row count.
 
@@ -187,18 +187,16 @@ def broadcast_if_bounded(n_rows: int, cap: int | None = None):
     ``F.broadcast`` hint — guide-style "you know the side is small,
     say so" — instead of trusting estimates that cannot exist.
 
-    Returns ``F.broadcast`` when ``0 <= n_rows <= cap``, else the
-    identity. ``cap`` defaults to ``$SPARK_GRAFT_STATE_BCAST_ROWS``
-    (2,000,000 — ~50 MB of (long, long, long) state rows framed,
-    well under the executor-memory cost ceiling of a broadcast
-    relation; a 100 TB dup graph whose node state exceeds the cap
-    keeps today's shuffle joins, same results).
+    Returns ``F.broadcast`` when ``n_rows`` is within the
+    ``state_bcast_rows`` lane cap (2,000,000 — ~50 MB of (long, long,
+    long) state rows framed, well under the executor-memory cost
+    ceiling of a broadcast relation; a 100 TB dup graph whose node
+    state exceeds the cap keeps today's shuffle joins, same results),
+    else the identity.
     """
-    import os
+    from aws_etl_spark.ops import lanes
 
-    if cap is None:
-        cap = int(os.environ.get("SPARK_GRAFT_STATE_BCAST_ROWS", "2000000"))
-    if 0 <= n_rows <= cap:
+    if lanes.within("state_bcast_rows", n_rows):
         return F.broadcast
     return lambda df: df
 
@@ -223,4 +221,25 @@ def bounded_rows_df(spark, rows, schema, rows_per_slice: int = 200_000):
         return spark.createDataFrame([], schema)
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, numSlices=n_slices), schema
+    )
+
+
+def dense_int_matrix(ex: DataFrame):
+    """Collect an exploded ``(id, dim, q)`` relation into ``(ids,
+    q_mat)``: ids ascending, one int64 row per id with its components
+    in ascending dim order. None when the vectors do not all carry the
+    same dim set (a ragged input, whose semantics the distributed
+    joins define); an empty relation gives ``([], empty matrix)``."""
+    import numpy as np
+
+    by_id: dict = {}
+    for row in ex.collect():
+        by_id.setdefault(row["id"], {})[row["dim"]] = row["q"]
+    dim_sets = {frozenset(dmap) for dmap in by_id.values()}
+    if len(dim_sets) > 1:
+        return None
+    ids = sorted(by_id)
+    dims = sorted(next(iter(dim_sets), ()))
+    return ids, np.array(
+        [[by_id[i][dm] for dm in dims] for i in ids], dtype=np.int64
     )

@@ -14,18 +14,17 @@ row share (the ``ops/scale.py::hot_keys`` survey reduced to a single
 scalar), memoized per (input fingerprint, key) so one bench/driver
 process pays it once per corpus however many queries consult it.
 
-``SPARK_GRAFT_SKEW_SHARE_PCT`` is the dial (default 20): a single key
-holding >= that percentage of rows routes the query to its chunked
-twin. 100 disables chunking outright; 0 forces it (the equivalence
-tests use both ends). ``SPARK_GRAFT_SKEW_MIN_ROWS`` (default
-1,000,000) is the engagement floor: below it the historical plan
-always runs — a "hot" key over a few thousand rows is not a
-straggler (one task finishes it in milliseconds), and tiny crafted
-corpora are trivially share-skewed (any 6-row fixture has a >=50%
-key), so a share test alone would silently reroute every
-edge-fixture differential. On the uniform bench corpus the probe
-always picks the historical plan, so declared results AND plans are
-unchanged there; the probe's own cost is the one counted aggregation.
+The caps live in ``ops/lanes.py``: a single key holding >=
+``skew_share_pct`` (20) percent of rows routes the query to its
+chunked twin. ``skew_min_rows`` (1,000,000) is the engagement floor:
+below it the historical plan always runs — a "hot" key over a few
+thousand rows is not a straggler (one task finishes it in
+milliseconds), and tiny crafted corpora are trivially share-skewed
+(any 6-row fixture has a >=50% key), so a share test alone would
+silently reroute every edge-fixture differential. On the uniform
+bench corpus the probe always picks the historical plan, so declared
+results AND plans are unchanged there; the probe's own cost is the
+one counted aggregation.
 """
 
 from __future__ import annotations
@@ -38,17 +37,6 @@ from pyspark.sql import functions as F
 
 _MEMO: dict[str, tuple[float, int]] = {}
 _LOCK = threading.Lock()
-
-
-def chunk_threshold() -> float:
-    """Hot-key row share above which the chunked form is chosen."""
-    return float(os.environ.get("SPARK_GRAFT_SKEW_SHARE_PCT", "20")) / 100.0
-
-
-def min_rows() -> int:
-    """Engagement floor: corpora below it never chunk (no straggler
-    can exist) and crafted edge fixtures keep the historical form."""
-    return int(os.environ.get("SPARK_GRAFT_SKEW_MIN_ROWS", "1000000"))
 
 
 def hot_key_share(df: DataFrame, key: str) -> tuple[float, int]:
@@ -80,15 +68,6 @@ def hot_key_share(df: DataFrame, key: str) -> tuple[float, int]:
     return share
 
 
-def min_bytes() -> int:
-    """Probe-engagement floor on INPUT FILE SIZE (default 64 MB ≈
-    2M event rows): below it the probe job itself is skipped — a
-    pure os.stat decision, so small corpora (every local bench/test
-    scale) pay literally nothing for the dial. A corpus too small to
-    clear this floor cannot clear the row floor either."""
-    return int(os.environ.get("SPARK_GRAFT_SKEW_MIN_BYTES", str(64 << 20)))
-
-
 def _input_bytes(df: DataFrame) -> int | None:
     """Total size of the local input files, or None when unknowable
     (remote schemes, in-memory relations) — unknown means 'probe'."""
@@ -113,14 +92,20 @@ def _input_bytes(df: DataFrame) -> int | None:
 
 
 def pick_chunked(df: DataFrame, key: str) -> bool:
-    """True when the chunked (skew-splittable) twin should run."""
-    thr = chunk_threshold()
-    if thr <= 0.0:
-        return True
-    if thr >= 1.0:
-        return False
+    """True when the chunked (skew-splittable) twin should run.
+
+    Below the ``skew_min_bytes`` input-size floor (64 MB ≈ 2M event
+    rows) the probe job itself is skipped — a pure os.stat decision,
+    so small corpora (every local bench/test scale) pay nothing. A
+    corpus too small to clear this floor cannot clear the row floor
+    either."""
+    from aws_etl_spark.ops import lanes
+
     size = _input_bytes(df)
-    if size is not None and size < min_bytes():
+    if size is not None and size < lanes.cap("skew_min_bytes"):
         return False  # no Spark job spent: nothing this small straggles
     share, tot = hot_key_share(df, key)
-    return tot >= min_rows() and share >= thr
+    return (
+        tot >= lanes.cap("skew_min_rows")
+        and share >= lanes.cap("skew_share_pct") / 100.0
+    )

@@ -23,13 +23,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def widen_if_narrow(df: DataFrame, min_parts: int | None = None) -> DataFrame:
+def widen_if_narrow(df: DataFrame) -> DataFrame:
     """Round-robin repartition ``df`` up to the session's default
     parallelism when its plan currently has fewer partitions; no-op
     (and no added exchange) otherwise."""
     spark = df.sparkSession
     try:
-        target = min_parts or spark.sparkContext.defaultParallelism
+        target = spark.sparkContext.defaultParallelism
         current = df.rdd.getNumPartitions()
     except Exception:
         # Connect-only sessions expose neither; widening is a local

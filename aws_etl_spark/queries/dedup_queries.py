@@ -762,16 +762,13 @@ def q_dedup_canonical_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Bounded-edge driver fast path (round-13 — the k-core/pagerank
     # bounded-collect treatment): the whole loop is integer MIN
     # propagation on enc = label*64 + dist (synchronous rounds: every
-    # neighborhood min reads the PRE-round state), so below the dial
+    # neighborhood min reads the PRE-round state), so below the cap
     # the 8 rounds replay bit-exactly on the collected directed edge
-    # list (enc DIV 64 == Python // on non-negative ids). Above it
-    # the distributed loop below runs unchanged.
-    import os
+    # list (enc DIV 64 == Python // on non-negative ids). Above the
+    # canon_edges cap the distributed loop below runs unchanged.
+    from aws_etl_spark.ops import lanes
 
-    driver_cap = int(
-        os.environ.get("SPARK_GRAFT_CANON_DRIVER_EDGES", "2000000")
-    )
-    if edges.count() <= driver_cap:
+    if lanes.within("canon_edges", edges.count()):
         from aws_etl_spark.ops.scale import bounded_rows_df
 
         el = [(r["u"], r["v"]) for r in edges.collect()]

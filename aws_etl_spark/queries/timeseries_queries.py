@@ -792,12 +792,9 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "event_type string, pi_micro bigint, pi double"
         )
-    import os
+    from aws_etl_spark.ops import lanes
 
-    driver_cap = int(
-        os.environ.get("SPARK_GRAFT_MARKOV_DRIVER_STATES", "512")
-    )
-    if n_states <= driver_cap:
+    if lanes.within("markov_states", n_states):
         # Bounded-state fast path (round-13): the iteration state is
         # one integer per STATE and the transition table ≤ states²
         # rows — at ≤512 states that is ≤256k tiny rows regardless of
@@ -805,8 +802,8 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         # arithmetic on the collected count table (the PCA/MMR
         # bounded-collect pattern) instead of 12 join+agg Spark jobs.
         # Bit-identical: (pi*n) DIV tot on non-negative BIGINTs ==
-        # Python //, and the sum per dst is integer. Above the cap
-        # (a corpus with more event types than the dial) the
+        # Python //, and the sum per dst is integer. Above the
+        # markov_states cap (a corpus with more event types) the
         # distributed loop below runs unchanged.
         rows = counts.collect()
         tot: dict = {}
@@ -2637,8 +2634,8 @@ FROM w GROUP BY prev
 def _register_markov_entropy() -> None:
     # Registered with an explicit body instead of the plain sql_query
     # helper so the round-14 skew probe (r13 verdict item 9) can pick
-    # the form at call time: a corpus whose hottest user holds >=
-    # SPARK_GRAFT_SKEW_SHARE_PCT of events routes to the chunked twin
+    # the form at call time: a corpus whose hottest user holds >= the
+    # skew_share_pct lane cap of events routes to the chunked twin
     # (oracle shared verbatim — hash-identical by the driver's own
     # proof); uniform corpora run the historical single-window text
     # unchanged. PLAIN_SQL still carries the text for the rescan lint.

@@ -51,63 +51,46 @@ def kcenter_greedy_quantized(
     # Bounded-cells driver fast path (round-13 — the pagerank/markov/
     # k-core bounded-collect treatment): every distance is a BIGINT
     # sum of squared integer deltas and the argmax tiebreak is pure
-    # integer comparison, so below the dial the k greedy rounds
-    # replay bit-exactly on the collected (id, dim, q) relation
+    # integer comparison, so below the kcenter_cells cap the k greedy
+    # rounds replay bit-exactly on the collected (id, dim, q) relation
     # (numpy int64 == BIGINT under the module's documented ≪2^63
     # product bound) instead of ~4 driver-coordinated jobs per round.
     # Non-uniform dim sets (a ragged vector) fall back to the
     # distributed loop, whose inner joins define that semantics.
-    import os
+    import numpy as np
 
-    driver_cap = int(
-        os.environ.get("SPARK_GRAFT_KCENTER_DRIVER_CELLS", "2000000")
+    from aws_etl_spark.ops import lanes
+    from aws_etl_spark.ops.scale import bounded_rows_df, dense_int_matrix
+
+    dense = (
+        dense_int_matrix(ex)
+        if lanes.within("kcenter_cells", ex.count())
+        else None
     )
-    if ex.count() <= driver_cap:
-        by_id: dict = {}
-        for row in ex.collect():
-            by_id.setdefault(row["id"], {})[row["dim"]] = row["q"]
-        dims0 = None
-        uniform = True
-        for dmap in by_id.values():
-            ks = frozenset(dmap)
-            if dims0 is None:
-                dims0 = ks
-            elif ks != dims0:
-                uniform = False
-                break
-        if not by_id:
+    if dense is not None:
+        ids, q_mat = dense
+        if not ids:
             return spark.createDataFrame(
                 [], "sel_order bigint, vec_id bigint, dist_q bigint"
             )
-        if uniform:
-            import numpy as np
+        picks_d: list[tuple[int, int, int]] = [(1, int(ids[0]), 0)]
 
-            from aws_etl_spark.ops.scale import bounded_rows_df
+        def dvec(j: int):
+            diff = q_mat - q_mat[j]
+            return (diff * diff).sum(axis=1)
 
-            ids = sorted(by_id)
-            dim_list = sorted(dims0)
-            q_mat = np.array(
-                [[by_id[i][dm] for dm in dim_list] for i in ids],
-                dtype=np.int64,
-            )
-            picks_d: list[tuple[int, int, int]] = [(1, int(ids[0]), 0)]
-
-            def dvec(j: int):
-                diff = q_mat - q_mat[j]
-                return (diff * diff).sum(axis=1)
-
-            mind_v = dvec(0)
-            for r in range(2, k + 1):
-                # np.argmax returns the FIRST max; ids ascending, so
-                # this is exactly max(struct(d, -id)) — min id on ties
-                j = int(mind_v.argmax())
-                picks_d.append((r, int(ids[j]), int(mind_v[j])))
-                mind_v = np.minimum(mind_v, dvec(j))
-            return bounded_rows_df(
-                spark,
-                picks_d,
-                "sel_order bigint, vec_id bigint, dist_q bigint",
-            )
+        mind_v = dvec(0)
+        for r in range(2, k + 1):
+            # np.argmax returns the FIRST max; ids ascending, so
+            # this is exactly max(struct(d, -id)) — min id on ties
+            j = int(mind_v.argmax())
+            picks_d.append((r, int(ids[j]), int(mind_v[j])))
+            mind_v = np.minimum(mind_v, dvec(j))
+        return bounded_rows_df(
+            spark,
+            picks_d,
+            "sel_order bigint, vec_id bigint, dist_q bigint",
+        )
 
     seed_id = ex.agg(F.min("id")).collect()[0][0]
     if seed_id is None:

@@ -81,70 +81,54 @@ def kmeans_quantized(
     # (BIGINT distance sums; argmin via max(struct(-d, -cluster)) =
     # min distance then min cluster id; update `s DIV n` on
     # NON-NEGATIVE quantized components, where DIV == Python //), so
-    # below the dial the n_iter rounds replay bit-exactly on the
-    # collected (id, dim, q) relation instead of ~5 driver-
-    # coordinated jobs per round. Ragged dim sets fall back to the
-    # distributed loop, whose joins define that semantics.
-    import os
+    # below the kmeans_cells cap the n_iter rounds replay bit-exactly
+    # on the collected (id, dim, q) relation instead of ~5 driver-
+    # coordinated jobs per round. Ragged dim sets (and an empty input)
+    # fall back to the distributed loop, whose joins define that
+    # semantics.
+    from aws_etl_spark.ops import lanes
+    from aws_etl_spark.ops.scale import bounded_rows_df, dense_int_matrix
 
-    driver_cap = int(
-        os.environ.get("SPARK_GRAFT_KMEANS_DRIVER_CELLS", "2000000")
+    dense = (
+        dense_int_matrix(ex)
+        if lanes.within("kmeans_cells", ex.count())
+        else None
     )
-    if ex.count() <= driver_cap:
-        by_id: dict = {}
-        for row in ex.collect():
-            by_id.setdefault(row["id"], {})[row["dim"]] = row["q"]
-        dims0 = None
-        uniform = bool(by_id)
-        for dmap in by_id.values():
-            ks = frozenset(dmap)
-            if dims0 is None:
-                dims0 = ks
-            elif ks != dims0:
-                uniform = False
-                break
-        if uniform:
-            import numpy as np
+    if dense is not None and dense[0]:
+        import numpy as np
 
-            from aws_etl_spark.ops.scale import bounded_rows_df
+        ids, q_mat = dense
+        clusters = ids[: min(k, len(ids))]  # k smallest ids seed
+        c_mat = np.array(
+            [q_mat[ids.index(c)] for c in clusters], dtype=np.int64
+        )
 
-            ids = sorted(by_id)
-            dim_list = sorted(dims0)
-            q_mat = np.array(
-                [[by_id[i][dm] for dm in dim_list] for i in ids],
-                dtype=np.int64,
-            )
-            clusters = ids[: min(k, len(ids))]  # k smallest ids seed
-            c_mat = np.array(
-                [q_mat[ids.index(c)] for c in clusters], dtype=np.int64
-            )
+        def assign_d():
+            # (n, k) integer distance matrix; argmin returns the
+            # FIRST min and clusters ascend, so ties break to the
+            # smallest cluster id exactly like max(struct(-d,-c))
+            d = (
+                (q_mat[:, None, :] - c_mat[None, :, :]) ** 2
+            ).sum(axis=2)
+            j = d.argmin(axis=1)
+            return j, d[np.arange(len(ids)), j]
 
-            def assign_d():
-                # (n, k) integer distance matrix; argmin returns the
-                # FIRST min and clusters ascend, so ties break to the
-                # smallest cluster id exactly like max(struct(-d,-c))
-                d = (
-                    (q_mat[:, None, :] - c_mat[None, :, :]) ** 2
-                ).sum(axis=2)
-                j = d.argmin(axis=1)
-                return j, d[np.arange(len(ids)), j]
-
-            for _ in range(n_iter):
-                j_v, _d = assign_d()
-                for ci in range(len(clusters)):
-                    members = q_mat[j_v == ci]
-                    if len(members):
-                        # Σq DIV n on non-negative BIGINTs == //
-                        c_mat[ci] = members.sum(axis=0) // len(members)
-            j_v, d_v = assign_d()
-            return bounded_rows_df(
-                emb.sparkSession,
-                [
-                    (int(ids[i]), int(clusters[j_v[i]]), int(d_v[i]))
-                    for i in range(len(ids))
-                ],
-                "vec_id bigint, cluster bigint, dist_q bigint",
-            )
+        for _ in range(n_iter):
+            j_v, _d = assign_d()
+            for ci in range(len(clusters)):
+                members = q_mat[j_v == ci]
+                if len(members):
+                    # Σq DIV n on non-negative BIGINTs == //
+                    c_mat[ci] = members.sum(axis=0) // len(members)
+        j_v, d_v = assign_d()
+        return bounded_rows_df(
+            emb.sparkSession,
+            [
+                (int(ids[i]), int(clusters[j_v[i]]), int(d_v[i]))
+                for i in range(len(ids))
+            ],
+            "vec_id bigint, cluster bigint, dist_q bigint",
+        )
 
     seeds = emb.select(F.col(id_col).alias("id")).orderBy("id").limit(k)
     centroids = (

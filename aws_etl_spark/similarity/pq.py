@@ -70,30 +70,16 @@ def _pq_trained(
 ):
     """(ex, centroids, codes): exploded shifted components, trained
     per-subspace codebooks, and the per-(id, sub) code assignment."""
-    import os
+    from aws_etl_spark.ops.pair_cache import trained_memo_key
 
-    memo_key = None
-    if not os.environ.get("SPARK_GRAFT_NO_PAIR_CACHE"):
-        from aws_etl_spark.ops.pair_cache import _fingerprint
-
-        fp = _fingerprint(
-            "pq_train",
-            emb,
-            {"id": id_col, "vec": vec_col, "m": m, "k": k, "iters": n_iter},
-        )
-        if fp is not None:
-            try:
-                sid = (
-                    emb.sparkSession.sparkContext.applicationId,
-                    id(emb.sparkSession),
-                )
-            except Exception:
-                sid = None
-            if sid is not None:
-                memo_key = (sid, fp)
-                hit = _PQ_MEMO.get(memo_key)
-                if hit is not None:
-                    return hit
+    memo_key = trained_memo_key(
+        "pq_train",
+        emb,
+        {"id": id_col, "vec": vec_col, "m": m, "k": k, "iters": n_iter},
+        per_session=True,
+    )
+    if memo_key in _PQ_MEMO:
+        return _PQ_MEMO[memo_key]
     d = emb.select(F.max(F.size(vec_col))).collect()[0][0]
     ex = _sub_exploded(emb, id_col, vec_col, m, d).localCheckpoint(eager=True)
 
@@ -101,16 +87,18 @@ def _pq_trained(
     # kmeans_quantized treatment applied to the PQ trainer): every
     # Lloyd quantity is integer (BIGINT squared-distance sums, argmin
     # via max(struct(-d, -cluster)), update `s DIV n` on NON-NEGATIVE
-    # quantized components where DIV == Python //), so below the dial
-    # the per-subspace rounds replay bit-exactly on the collected
-    # (id, sub, dim, q) relation — the dict-based replay mirrors the
-    # JOIN semantics exactly (dists over dims present in both the
-    # vector and the centroid; update keys outside the centroid set
-    # dropped by the left join), so ragged dim sets need no fallback.
+    # quantized components where DIV == Python //), so below the
+    # pq_cells cap the per-subspace rounds replay bit-exactly on the
+    # collected (id, sub, dim, q) relation — the dict-based replay
+    # mirrors the JOIN semantics exactly (dists over dims present in
+    # both the vector and the centroid; update keys outside the
+    # centroid set dropped by the left join), so ragged dim sets need
+    # no fallback.
     # The exploded relation itself stays a checkpointed DataFrame —
     # the downstream ADC/recall legs are data-sized and distributed.
-    driver_cap = int(os.environ.get("SPARK_GRAFT_PQ_DRIVER_CELLS", "2000000"))
-    if driver_cap > 0 and ex.count() <= driver_cap:
+    from aws_etl_spark.ops import lanes
+
+    if lanes.within("pq_cells", ex.count()):
         centroids_d, codes_d = _pq_lloyd_driver(
             emb.sparkSession, ex.collect(), k, n_iter
         )

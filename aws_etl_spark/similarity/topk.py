@@ -522,26 +522,22 @@ def _train_spherical_centroids(
     ``_TRAIN_MEMO`` when the same (corpus, params) trained before in
     this process.
     """
-    import os
+    from aws_etl_spark.ops.pair_cache import trained_memo_key
 
-    memo_key = None
-    if not os.environ.get("SPARK_GRAFT_NO_PAIR_CACHE"):
-        from aws_etl_spark.ops.pair_cache import _fingerprint
-
-        memo_key = _fingerprint(
-            "kmeans_train",
-            corpus,
-            {
-                "id": id_col,
-                "vec": vec_col,
-                "k": n_centroids,
-                "iters": n_iters,
-                "seed": seed,
-                "sample": train_sample,
-            },
-        )
-        if memo_key is not None and memo_key in _TRAIN_MEMO:
-            return [(cid, list(cv)) for cid, cv in _TRAIN_MEMO[memo_key]]
+    memo_key = trained_memo_key(
+        "kmeans_train",
+        corpus,
+        {
+            "id": id_col,
+            "vec": vec_col,
+            "k": n_centroids,
+            "iters": n_iters,
+            "seed": seed,
+            "sample": train_sample,
+        },
+    )
+    if memo_key in _TRAIN_MEMO:
+        return [(cid, list(cv)) for cid, cv in _TRAIN_MEMO[memo_key]]
     n = corpus.count()
     frac = min(1.0, train_sample / max(n, 1))
     unit = F.transform(F.col(vec_col), lambda x: x.cast("double") / norm(F.col(vec_col)))
@@ -552,7 +548,7 @@ def _train_spherical_centroids(
     # Bounded-collect driver fast path (round-13 session 5 — the
     # float-pagerank treatment): the trainer is SAMPLE-bounded by
     # construction (≤ train_sample rows whatever the corpus size), so
-    # below SPARK_GRAFT_KMEANS_TRAIN_DRIVER_ROWS the init + Lloyd
+    # within the kmeans_train_rows lane cap the init + Lloyd
     # rounds (each a count/collect/BatchEvalPython-assign/explode-agg
     # job chain) collapse to numpy on the collected unit vectors (the
     # SAME per-row `A @ cv` dot and first-max argmax the assign UDF
@@ -560,13 +556,10 @@ def _train_spherical_centroids(
     # distributed shuffle never pinned either — consumers are
     # rows-only by contract, and the driver-vs-distributed drift is
     # tolerance-pinned in tests/test_r13_fastpaths.py). Above the
-    # dial (or with the dial 0) the distributed loop is untouched.
-    cap = int(os.environ.get("SPARK_GRAFT_KMEANS_TRAIN_DRIVER_ROWS", "200000"))
-    collected = None
-    if cap > 0:
-        probe = sample.limit(cap + 1).collect()
-        if len(probe) <= cap:
-            collected = probe
+    # cap the distributed loop is untouched.
+    from aws_etl_spark.ops import lanes
+
+    collected = lanes.collect_within("kmeans_train_rows", sample)
     if collected is not None:
         cents = _lloyd_driver(collected, n_centroids, n_iters)
         if memo_key is not None:

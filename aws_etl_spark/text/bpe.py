@@ -195,28 +195,16 @@ def _train_rounds(
     """(final seq state, per-round 1-row merge-rule DataFrames);
     served from ``_TRAIN_MEMO`` on a repeat (corpus, params) in one
     session."""
-    import os
+    from aws_etl_spark.ops.pair_cache import trained_memo_key
 
-    memo_key = None
-    if not os.environ.get("SPARK_GRAFT_NO_PAIR_CACHE"):
-        from aws_etl_spark.ops.pair_cache import _fingerprint
-
-        fp = _fingerprint(
-            "bpe_train", docs, {"text": text_col, "rounds": n_rounds}
-        )
-        if fp is not None:
-            try:
-                sid = (
-                    docs.sparkSession.sparkContext.applicationId,
-                    id(docs.sparkSession),
-                )
-            except Exception:
-                sid = None
-            if sid is not None:
-                memo_key = (sid, fp)
-                hit = _TRAIN_MEMO.get(memo_key)
-                if hit is not None:
-                    return hit
+    memo_key = trained_memo_key(
+        "bpe_train",
+        docs,
+        {"text": text_col, "rounds": n_rounds},
+        per_session=True,
+    )
+    if memo_key in _TRAIN_MEMO:
+        return _TRAIN_MEMO[memo_key]
     result = _train_rounds_driver(docs, text_col, n_rounds)
     if result is None:
         result = _train_rounds_distributed(docs, text_col, n_rounds)
@@ -234,27 +222,24 @@ def _train_rounds_driver(
     THE key scale property of BPE training is that after the one
     corpus-sized word-inventory pass, every round runs on the
     vocabulary-sized distinct-word table — state whose size is a
-    property of the LANGUAGE, not the corpus. Below
-    ``SPARK_GRAFT_BPE_DRIVER_WORDS`` distinct words the 3 rounds ×
-    (pair-count + top-1 + merge + checkpoint) driver-coordinated
-    Spark jobs collapse to pure-Python integer arithmetic on the
-    collected inventory; above the dial (or when the inventory limit
-    probe overflows) the distributed loop runs untouched. The replay
-    is bit-exact: pair counts are integer sums of BIGINT frequencies,
-    the rule argmax tiebreak (count DESC, sym_a, sym_b) compares
+    property of the LANGUAGE, not the corpus. Up to the ``bpe_words``
+    lane cap of distinct words the 3 rounds × (pair-count + top-1 +
+    merge + checkpoint) driver-coordinated Spark jobs collapse to
+    pure-Python integer arithmetic on the collected inventory; when
+    the inventory limit probe overflows the cap the distributed loop
+    runs untouched. The replay is bit-exact: pair counts are integer
+    sums of BIGINT frequencies, the rule argmax tiebreak (count DESC,
+    sym_a, sym_b) compares
     ASCII strings (WORD_RE admits only [a-z], plus the </w> marker),
     and the left-to-right greedy scan implements exactly the
     odd-offset island rule (merge-and-skip can never merge an even
-    offset of a same-symbol run). Returns None when the dial says
+    offset of a same-symbol run). Returns None when the cap says
     "too big" — the caller falls through to the distributed loop.
     """
-    import os
+    from aws_etl_spark.ops import lanes
 
-    cap = int(os.environ.get("SPARK_GRAFT_BPE_DRIVER_WORDS", "200000"))
-    if cap <= 0:
-        return None
-    inv = word_inventory(docs, text_col).limit(cap + 1).collect()
-    if len(inv) > cap:
+    inv = lanes.collect_within("bpe_words", word_inventory(docs, text_col))
+    if inv is None:
         return None
 
     from aws_etl_spark.ops.scale import bounded_rows_df

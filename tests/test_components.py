@@ -59,13 +59,13 @@ def test_dedup_clusters_full_corpus(spark, sf_dir):
         assert min(m.doc_id for m in members) == cid
 
 
-def test_cc_distributed_path_matches_fast_path(spark):
-    """Force the star-contraction path (small_graph_edges=0) and check
-    it agrees with driver union-find on a multi-round chain graph."""
+def test_cc_distributed_path_matches_fast_path(spark, monkeypatch):
+    """Force the star-contraction path (cc_edges cap -1) and check it
+    agrees with driver union-find on a multi-round chain graph."""
+    from aws_etl_spark.ops import lanes
+
     edges = [(i, i + 1) for i in range(1, 40)] + [(100, 101), (101, 102)]
     df = spark.createDataFrame(edges, ["id_a", "id_b"])
-    got = {
-        r.node: r.comp
-        for r in connected_components(df, small_graph_edges=0).collect()
-    }
+    monkeypatch.setitem(lanes.CAPS, "cc_edges", -1)
+    got = {r.node: r.comp for r in connected_components(df).collect()}
     assert got == _union_find(edges)

@@ -1,12 +1,10 @@
 """Round-13 bounded-state driver fast paths: forced-path equivalence.
 
-Two iterative operators gained a driver fast path this round (the
-bounded-collect pattern): ``pagerank_quantized`` below the
-``SPARK_GRAFT_PAGERANK_DRIVER_EDGES`` edge dial and
-``events_markov_stationary`` below ``SPARK_GRAFT_MARKOV_DRIVER_STATES``.
-Both paths are exact integer arithmetic, so the outputs must be
-BIT-IDENTICAL, not merely close. These tests force each path via the
-dial (0 disables the fast path) and compare full row sets.
+Each iterative operator with a driver fast path (the bounded-collect
+pattern) picks its lane from a cap in ``aws_etl_spark/ops/lanes.py``.
+The integer-exact paths must be BIT-IDENTICAL, not merely close. These
+tests force the distributed lane by patching the cap to -1, compare
+full row sets, and check through ``lane_log`` which lane actually ran.
 """
 
 from __future__ import annotations
@@ -21,6 +19,43 @@ from tests.conftest import SF_SMOKE
 pytestmark = pytest.mark.slow
 
 
+@pytest.fixture
+def lane_log(monkeypatch):
+    """(lane, driver lane chosen) for every lanes.within /
+    lanes.collect_within decision made while the test runs."""
+    from aws_etl_spark.ops import lanes
+
+    log: list[tuple[str, bool]] = []
+    within, collect_within = lanes.within, lanes.collect_within
+
+    def spy_within(lane, n):
+        ok = within(lane, n)
+        log.append((lane, ok))
+        return ok
+
+    def spy_collect_within(lane, df):
+        rows = collect_within(lane, df)
+        log.append((lane, rows is not None))
+        return rows
+
+    monkeypatch.setattr(lanes, "within", spy_within)
+    monkeypatch.setattr(lanes, "collect_within", spy_collect_within)
+    return log
+
+
+def _chosen(log, lane):
+    """The lane decisions recorded for ``lane``, then clears the log."""
+    out = [ok for name, ok in log if name == lane]
+    log.clear()
+    return out
+
+
+def _force(monkeypatch, lane, cap):
+    from aws_etl_spark.ops import lanes
+
+    monkeypatch.setitem(lanes.CAPS, lane, cap)
+
+
 def _pairs(spark):
     # a small multi-component graph with asymmetric degrees so ranks
     # actually differ per node (two triangles bridged + a pendant)
@@ -33,29 +68,33 @@ def _pairs(spark):
     return spark.createDataFrame(rows, "id_a bigint, id_b bigint")
 
 
-def test_pagerank_quantized_driver_matches_distributed(spark, monkeypatch):
+def test_pagerank_quantized_driver_matches_distributed(spark, monkeypatch,
+                                                       lane_log):
     from aws_etl_spark.dedup.pagerank import pagerank_quantized
 
     pairs = _pairs(spark)
-    monkeypatch.delenv("SPARK_GRAFT_PAGERANK_DRIVER_EDGES", raising=False)
     fast = {tuple(r) for r in pagerank_quantized(pairs).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_PAGERANK_DRIVER_EDGES", "0")
+    assert _chosen(lane_log, "pagerank_edges") == [True]
+    _force(monkeypatch, "pagerank_edges", -1)
     slow = {tuple(r) for r in pagerank_quantized(pairs).collect()}
+    assert _chosen(lane_log, "pagerank_edges") == [False]
     assert fast == slow
     assert len(fast) == 7  # every node present exactly once
 
 
-def test_pagerank_quantized_dial_boundary(spark, monkeypatch):
+def test_pagerank_quantized_dial_boundary(spark, monkeypatch, lane_log):
     """cap == edge count keeps the fast path; cap == edges-1 forces
     the distributed loop (the gate is <=)."""
     from aws_etl_spark.dedup.pagerank import pagerank_quantized
 
     pairs = _pairs(spark)
     # 8 undirected pairs -> 16 symmetrized edges
-    monkeypatch.setenv("SPARK_GRAFT_PAGERANK_DRIVER_EDGES", "16")
+    _force(monkeypatch, "pagerank_edges", 16)
     at_cap = {tuple(r) for r in pagerank_quantized(pairs).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_PAGERANK_DRIVER_EDGES", "15")
+    assert _chosen(lane_log, "pagerank_edges") == [True]
+    _force(monkeypatch, "pagerank_edges", 15)
     above = {tuple(r) for r in pagerank_quantized(pairs).collect()}
+    assert _chosen(lane_log, "pagerank_edges") == [False]
     assert at_cap == above
 
 
@@ -84,15 +123,17 @@ def test_shared_shingle_artifacts_match_uncached(spark, monkeypatch, name):
     assert cached == uncached and cached
 
 
-def test_markov_stationary_driver_matches_distributed(spark, monkeypatch):
+def test_markov_stationary_driver_matches_distributed(spark, monkeypatch,
+                                                      lane_log):
     from aws_etl_spark.queries.registry import REGISTRY, _ensure_loaded
 
     _ensure_loaded()
     fn = REGISTRY["events_markov_stationary"].fn
-    monkeypatch.delenv("SPARK_GRAFT_MARKOV_DRIVER_STATES", raising=False)
     fast = {tuple(r) for r in fn(spark, SF_SMOKE).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_MARKOV_DRIVER_STATES", "0")
+    assert _chosen(lane_log, "markov_states") == [True]
+    _force(monkeypatch, "markov_states", -1)
     slow = {tuple(r) for r in fn(spark, SF_SMOKE).collect()}
+    assert _chosen(lane_log, "markov_states") == [False]
     assert fast and fast == slow
 
 
@@ -117,19 +158,20 @@ def test_para_token_substituted_and_oracle_free(spark):
     assert "Repartition" in plan
 
 
-def test_kcore_driver_matches_distributed(spark, monkeypatch):
+def test_kcore_driver_matches_distributed(spark, monkeypatch, lane_log):
     from aws_etl_spark.dedup.graph_metrics import k_core_membership
 
     pairs = _pairs(spark)
-    monkeypatch.delenv("SPARK_GRAFT_KCORE_DRIVER_EDGES", raising=False)
     fast = {tuple(r) for r in k_core_membership(pairs).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_KCORE_DRIVER_EDGES", "0")
+    assert _chosen(lane_log, "kcore_edges") == [True]
+    _force(monkeypatch, "kcore_edges", -1)
     slow = {tuple(r) for r in k_core_membership(pairs).collect()}
+    assert _chosen(lane_log, "kcore_edges") == [False]
     assert fast == slow
     assert len(fast) == 7  # every node of the fixture graph labeled
 
 
-def test_kcenter_driver_matches_distributed(spark, monkeypatch):
+def test_kcenter_driver_matches_distributed(spark, monkeypatch, lane_log):
     from aws_etl_spark.similarity.kcenter import kcenter_greedy_quantized
 
     emb = spark.createDataFrame(
@@ -137,15 +179,16 @@ def test_kcenter_driver_matches_distributed(spark, monkeypatch):
          for i in range(1, 12)],
         "vec_id bigint, embedding array<double>",
     )
-    monkeypatch.delenv("SPARK_GRAFT_KCENTER_DRIVER_CELLS", raising=False)
     fast = [tuple(r) for r in kcenter_greedy_quantized(emb, k=4).collect()]
-    monkeypatch.setenv("SPARK_GRAFT_KCENTER_DRIVER_CELLS", "0")
+    assert _chosen(lane_log, "kcenter_cells") == [True]
+    _force(monkeypatch, "kcenter_cells", -1)
     slow = [tuple(r) for r in kcenter_greedy_quantized(emb, k=4).collect()]
+    assert _chosen(lane_log, "kcenter_cells") == [False]
     assert sorted(fast) == sorted(slow)
     assert len(fast) == 4
 
 
-def test_kmeans_driver_matches_distributed(spark, monkeypatch):
+def test_kmeans_driver_matches_distributed(spark, monkeypatch, lane_log):
     from aws_etl_spark.similarity.kmeans import kmeans_quantized
 
     emb = spark.createDataFrame(
@@ -153,39 +196,43 @@ def test_kmeans_driver_matches_distributed(spark, monkeypatch):
          for i in range(1, 21)],
         "vec_id bigint, embedding array<double>",
     )
-    monkeypatch.delenv("SPARK_GRAFT_KMEANS_DRIVER_CELLS", raising=False)
     fast = {tuple(r) for r in kmeans_quantized(emb, k=4, n_iter=3).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_KMEANS_DRIVER_CELLS", "0")
+    assert _chosen(lane_log, "kmeans_cells") == [True]
+    _force(monkeypatch, "kmeans_cells", -1)
     slow = {tuple(r) for r in kmeans_quantized(emb, k=4, n_iter=3).collect()}
+    assert _chosen(lane_log, "kmeans_cells") == [False]
     assert fast == slow
     assert len(fast) == 20
 
 
-def test_canonical_distance_driver_matches_distributed(spark, monkeypatch):
+def test_canonical_distance_driver_matches_distributed(spark, monkeypatch,
+                                                       lane_log):
     from aws_etl_spark.queries.registry import REGISTRY, _ensure_loaded
 
     _ensure_loaded()
     fn = REGISTRY["dedup_canonical_distance"].fn
-    monkeypatch.delenv("SPARK_GRAFT_CANON_DRIVER_EDGES", raising=False)
     fast = {tuple(r) for r in fn(spark, SF_SMOKE).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_CANON_DRIVER_EDGES", "0")
+    assert _chosen(lane_log, "canon_edges") == [True]
+    _force(monkeypatch, "canon_edges", -1)
     slow = {tuple(r) for r in fn(spark, SF_SMOKE).collect()}
+    assert _chosen(lane_log, "canon_edges") == [False]
     assert fast and fast == slow
 
 
-def test_lpa_driver_matches_distributed(spark, monkeypatch):
+def test_lpa_driver_matches_distributed(spark, monkeypatch, lane_log):
     from aws_etl_spark.dedup.graph_metrics import label_propagation
 
     pairs = _pairs(spark)
-    monkeypatch.delenv("SPARK_GRAFT_LPA_DRIVER_EDGES", raising=False)
     fast = {tuple(r) for r in label_propagation(pairs).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_LPA_DRIVER_EDGES", "0")
+    assert _chosen(lane_log, "lpa_edges") == [True]
+    _force(monkeypatch, "lpa_edges", -1)
     slow = {tuple(r) for r in label_propagation(pairs).collect()}
+    assert _chosen(lane_log, "lpa_edges") == [False]
     assert fast == slow
     assert len(fast) == 7
 
 
-def test_float_pagerank_driver_within_contract(spark, monkeypatch):
+def test_float_pagerank_driver_within_contract(spark, monkeypatch, lane_log):
     """The float-variant driver replay must agree with the distributed
     loop to the query's declared tolerance (1e-6 relative — the same
     pin test_pagerank_matches_exact_power_iteration enforces; exact
@@ -194,17 +241,18 @@ def test_float_pagerank_driver_within_contract(spark, monkeypatch):
     from aws_etl_spark.dedup.pagerank import pagerank
 
     pairs = _pairs(spark)
-    monkeypatch.delenv("SPARK_GRAFT_PAGERANK_DRIVER_EDGES", raising=False)
     fast = {r["node"]: (r["rank"], r["degree"]) for r in pagerank(pairs).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_PAGERANK_DRIVER_EDGES", "0")
+    assert _chosen(lane_log, "pagerank_edges") == [True]
+    _force(monkeypatch, "pagerank_edges", -1)
     slow = {r["node"]: (r["rank"], r["degree"]) for r in pagerank(pairs).collect()}
+    assert _chosen(lane_log, "pagerank_edges") == [False]
     assert set(fast) == set(slow) and len(fast) == 7
     for n in fast:
         assert fast[n][1] == slow[n][1]
         assert abs(fast[n][0] - slow[n][0]) <= 1e-9 + 1e-6 * abs(slow[n][0])
 
 
-def test_bpe_driver_matches_distributed(spark, monkeypatch):
+def test_bpe_driver_matches_distributed(spark, monkeypatch, lane_log):
     """BPE training's bounded-collect driver replay (session 5) must
     be BIT-IDENTICAL to the distributed merge rounds: integer pair
     counts, ASCII (count DESC, sym_a, sym_b) argmax, and the greedy
@@ -232,15 +280,16 @@ def test_bpe_driver_matches_distributed(spark, monkeypatch):
             sorted(tuple(r) for r in seq.collect()),
         )
 
-    monkeypatch.delenv("SPARK_GRAFT_BPE_DRIVER_WORDS", raising=False)
     fast = train()
-    monkeypatch.setenv("SPARK_GRAFT_BPE_DRIVER_WORDS", "0")
+    assert _chosen(lane_log, "bpe_words") == [True, True]
+    _force(monkeypatch, "bpe_words", -1)
     slow = train()
+    assert _chosen(lane_log, "bpe_words") == [False, False]
     assert fast == slow
     assert len(fast[0]) == 3  # three merge rules learned
 
 
-def test_bpe_driver_dial_boundary(spark, monkeypatch):
+def test_bpe_driver_dial_boundary(spark, monkeypatch, lane_log):
     """cap == distinct-word count keeps the fast path; cap one below
     forces the distributed loop (the limit probe overflows)."""
     import aws_etl_spark.text.bpe as bpe
@@ -259,10 +308,12 @@ def test_bpe_driver_dial_boundary(spark, monkeypatch):
             sorted(tuple(r) for r in vocab.collect()),
         )
 
-    monkeypatch.setenv("SPARK_GRAFT_BPE_DRIVER_WORDS", str(n_words))
+    _force(monkeypatch, "bpe_words", n_words)
     at_cap = train()
-    monkeypatch.setenv("SPARK_GRAFT_BPE_DRIVER_WORDS", str(n_words - 1))
+    assert _chosen(lane_log, "bpe_words") == [True]
+    _force(monkeypatch, "bpe_words", n_words - 1)
     below = train()
+    assert _chosen(lane_log, "bpe_words") == [False]
     assert at_cap == below
 
 
@@ -324,7 +375,8 @@ def test_minhash_group_expand_matches_join_pairs(spark):
     assert got == expect and got
 
 
-def test_kmeans_train_driver_matches_distributed(spark, monkeypatch):
+def test_kmeans_train_driver_matches_distributed(spark, monkeypatch,
+                                                 lane_log):
     """The spherical-k-means trainer's bounded-collect fast path
     (session 5) must agree with the distributed Lloyd loop to float
     tolerance (the float-pagerank contract: the distributed per-
@@ -334,12 +386,13 @@ def test_kmeans_train_driver_matches_distributed(spark, monkeypatch):
     from aws_etl_spark.queries.registry import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    monkeypatch.delenv("SPARK_GRAFT_KMEANS_TRAIN_DRIVER_ROWS", raising=False)
     topk._TRAIN_MEMO.clear()
     fast = topk._train_spherical_centroids(emb, "vec_id", "embedding", 16, 2, 42)
-    monkeypatch.setenv("SPARK_GRAFT_KMEANS_TRAIN_DRIVER_ROWS", "0")
+    assert _chosen(lane_log, "kmeans_train_rows") == [True]
+    _force(monkeypatch, "kmeans_train_rows", -1)
     topk._TRAIN_MEMO.clear()
     slow = topk._train_spherical_centroids(emb, "vec_id", "embedding", 16, 2, 42)
+    assert _chosen(lane_log, "kmeans_train_rows") == [False]
     topk._TRAIN_MEMO.clear()
     assert [c for c, _ in fast] == [c for c, _ in slow]
     for (_, va), (_, vb) in zip(fast, slow):
@@ -348,22 +401,25 @@ def test_kmeans_train_driver_matches_distributed(spark, monkeypatch):
             assert abs(x - y) <= 1e-9 + 1e-6 * abs(y)
 
 
-def test_kmeans_train_driver_dial_boundary(spark, monkeypatch):
-    """cap >= sample size keeps the fast path; a 1-row cap forces the
+def test_kmeans_train_driver_dial_boundary(spark, monkeypatch, lane_log):
+    """cap == sample size keeps the fast path; one below forces the
     distributed loop (the limit probe overflows) — same centroids to
     tolerance either way."""
     import aws_etl_spark.similarity.topk as topk
     from aws_etl_spark.queries.registry import load_table
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
-    monkeypatch.setenv("SPARK_GRAFT_KMEANS_TRAIN_DRIVER_ROWS", "1")
+    n = emb.count()  # below the 100k train sample: the sample is all rows
+    _force(monkeypatch, "kmeans_train_rows", n - 1)
     topk._TRAIN_MEMO.clear()
     forced_slow = topk._train_spherical_centroids(
         emb, "vec_id", "embedding", 8, 1, 7
     )
-    monkeypatch.delenv("SPARK_GRAFT_KMEANS_TRAIN_DRIVER_ROWS", raising=False)
+    assert _chosen(lane_log, "kmeans_train_rows") == [False]
+    _force(monkeypatch, "kmeans_train_rows", n)
     topk._TRAIN_MEMO.clear()
     fast = topk._train_spherical_centroids(emb, "vec_id", "embedding", 8, 1, 7)
+    assert _chosen(lane_log, "kmeans_train_rows") == [True]
     topk._TRAIN_MEMO.clear()
     assert len(forced_slow) == len(fast) == 8
     for (_, va), (_, vb) in zip(fast, forced_slow):
@@ -371,7 +427,7 @@ def test_kmeans_train_driver_dial_boundary(spark, monkeypatch):
             assert abs(x - y) <= 1e-9 + 1e-6 * abs(y)
 
 
-def test_pq_trainer_driver_matches_distributed(spark, monkeypatch):
+def test_pq_trainer_driver_matches_distributed(spark, monkeypatch, lane_log):
     """The PQ trainer's bounded-cells driver replay (session 5) must
     be BIT-IDENTICAL to the distributed per-subspace Lloyd rounds —
     integer arithmetic throughout, so exact equality on codebooks,
@@ -390,15 +446,16 @@ def test_pq_trainer_driver_matches_distributed(spark, monkeypatch):
         adc, _ = pq.pq_adc_topk(emb, m=2, k=4, n_iter=2, n_queries=3, topk=3)
         return sorted(tuple(r) for r in adc.collect())
 
-    monkeypatch.delenv("SPARK_GRAFT_PQ_DRIVER_CELLS", raising=False)
     fast = run()
-    monkeypatch.setenv("SPARK_GRAFT_PQ_DRIVER_CELLS", "0")
+    assert _chosen(lane_log, "pq_cells") == [True]
+    _force(monkeypatch, "pq_cells", -1)
     slow = run()
+    assert _chosen(lane_log, "pq_cells") == [False]
     pq._PQ_MEMO.clear()
     assert fast and fast == slow
 
 
-def test_pq_trainer_dial_boundary(spark, monkeypatch):
+def test_pq_trainer_dial_boundary(spark, monkeypatch, lane_log):
     """cap == cell count keeps the fast path; one below forces the
     distributed loop (the gate is <=) — identical output either way."""
     import aws_etl_spark.similarity.pq as pq
@@ -415,9 +472,11 @@ def test_pq_trainer_dial_boundary(spark, monkeypatch):
         adc, _ = pq.pq_adc_topk(emb, m=2, k=3, n_iter=1, n_queries=2, topk=2)
         return sorted(tuple(r) for r in adc.collect())
 
-    monkeypatch.setenv("SPARK_GRAFT_PQ_DRIVER_CELLS", str(cells))
+    _force(monkeypatch, "pq_cells", cells)
     at_cap = run()
-    monkeypatch.setenv("SPARK_GRAFT_PQ_DRIVER_CELLS", str(cells - 1))
+    assert _chosen(lane_log, "pq_cells") == [True]
+    _force(monkeypatch, "pq_cells", cells - 1)
     below = run()
+    assert _chosen(lane_log, "pq_cells") == [False]
     pq._PQ_MEMO.clear()
     assert at_cap == below

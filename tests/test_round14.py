@@ -114,8 +114,8 @@ def test_min_df_prune_is_pair_preserving(spark, tmp_path, monkeypatch):
 def test_skew_probe_share_and_floor(spark, tmp_path, monkeypatch):
     """hot_key_share computes the hottest key's row share; the
     engagement floor keeps tiny (trivially share-skewed) corpora on
-    the historical plan, and the env dials force both ends."""
-    from aws_etl_spark.ops import skew_probe
+    the historical plan, and the lane caps force both ends."""
+    from aws_etl_spark.ops import lanes, skew_probe
 
     rows = [(1, i) for i in range(8)] + [(2, 100), (3, 101)]
     src = str(tmp_path / "ev.parquet")
@@ -131,39 +131,85 @@ def test_skew_probe_share_and_floor(spark, tmp_path, monkeypatch):
     assert _fingerprint("hot_key_share:user_id", df, {}) in skew_probe._MEMO
     # default floors (64 MB input / 1M rows) keep the tiny 80%-skewed
     # frame un-chunked — and the byte floor decides WITHOUT a job
-    monkeypatch.delenv("SPARK_GRAFT_SKEW_SHARE_PCT", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_SKEW_MIN_ROWS", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_SKEW_MIN_BYTES", raising=False)
     assert skew_probe.pick_chunked(df, "user_id") is False
     # byte floor alone lowered: row floor still holds the line
-    monkeypatch.setenv("SPARK_GRAFT_SKEW_MIN_BYTES", "0")
+    monkeypatch.setitem(lanes.CAPS, "skew_min_bytes", 0)
     assert skew_probe.pick_chunked(df, "user_id") is False
-    # both floors lowered -> the share decides
-    monkeypatch.setenv("SPARK_GRAFT_SKEW_MIN_ROWS", "1")
+    # both floors lowered -> the share decides (0.8 >= 20%)
+    monkeypatch.setitem(lanes.CAPS, "skew_min_rows", 1)
     assert skew_probe.pick_chunked(df, "user_id") is True
-    # hard dial ends
-    monkeypatch.setenv("SPARK_GRAFT_SKEW_SHARE_PCT", "100")
+    # share cap just above the hot key's 80% -> historical; 0% -> chunked
+    monkeypatch.setitem(lanes.CAPS, "skew_share_pct", 81)
     assert skew_probe.pick_chunked(df, "user_id") is False
-    monkeypatch.setenv("SPARK_GRAFT_SKEW_SHARE_PCT", "0")
+    monkeypatch.setitem(lanes.CAPS, "skew_share_pct", 0)
     assert skew_probe.pick_chunked(df, "user_id") is True
 
 
 def test_skew_probe_routes_parent_to_chunked_twin(spark, sf_dir,
                                                   monkeypatch):
-    """With the dial forced on, the PARENT queries return the chunked
-    twins' rows (hash-identical by the shared oracle); with it forced
-    off, the historical rows. Both lanes equal — the probe can never
-    change what the queries compute."""
-    from aws_etl_spark.queries.registry import REGISTRY, _ensure_loaded
+    """With the skew caps forced on, the PARENT queries return the
+    chunked twins' rows (hash-identical by the shared oracle); with
+    the default caps (the fixture is far below the floors), the
+    historical rows. Both lanes equal — the probe can never change
+    what the queries compute."""
+    from aws_etl_spark.ops import lanes, skew_probe
+    from aws_etl_spark.queries.registry import (
+        REGISTRY,
+        _ensure_loaded,
+        load_table,
+    )
 
     _ensure_loaded()
-    for name in ("events_sessionization", "events_markov_entropy"):
-        monkeypatch.setenv("SPARK_GRAFT_SKEW_SHARE_PCT", "100")
-        plain = sorted(map(tuple, REGISTRY[name].fn(spark, sf_dir).collect()))
-        monkeypatch.setenv("SPARK_GRAFT_SKEW_SHARE_PCT", "0")
-        chunked = sorted(map(tuple, REGISTRY[name].fn(spark, sf_dir).collect()))
-        assert plain == chunked, name
-        assert len(plain) > 0, name
+    names = ("events_sessionization", "events_markov_entropy")
+    events = load_table(spark, sf_dir, "events")
+
+    def rows(name):
+        return sorted(map(tuple, REGISTRY[name].fn(spark, sf_dir).collect()))
+
+    assert skew_probe.pick_chunked(events, "user_id") is False
+    plain = {name: rows(name) for name in names}
+    for lane in ("skew_min_bytes", "skew_min_rows", "skew_share_pct"):
+        monkeypatch.setitem(lanes.CAPS, lane, 0)
+    assert skew_probe.pick_chunked(events, "user_id") is True
+    for name in names:
+        assert plain[name] == rows(name), name
+        assert len(plain[name]) > 0, name
+
+
+def test_scratch_uri_failed_rename_raises(spark, tmp_path, monkeypatch):
+    """A rename that fails while the destination is still missing is
+    a storage fault, not a lost race: materialized() raises instead of
+    reading a path that was never committed."""
+    from aws_etl_spark.ops import pair_cache
+
+    src = str(tmp_path / "in.parquet")
+    spark.range(5).write.parquet(src)
+    df = spark.read.parquet(src)
+    real_fs = pair_cache._hadoop_fs
+
+    class NoRename:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def rename(self, src, dst):
+            return False
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    def no_rename_fs(spark, uri):
+        fs, path = real_fs(spark, uri)
+        return NoRename(fs), path
+
+    monkeypatch.setattr(pair_cache, "_hadoop_fs", no_rename_fs)
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_URI", f"file://{tmp_path}/scratch")
+    monkeypatch.delenv("SPARK_GRAFT_NO_PAIR_CACHE", raising=False)
+    _reset_remote_root()
+    try:
+        with pytest.raises(OSError, match="could not rename"):
+            pair_cache.materialized("rename_fault", df, {}, lambda: df)
+    finally:
+        _reset_remote_root()
 
 
 @pytest.mark.slow  # round-14 verify-budget split (r13 verdict item 1)
